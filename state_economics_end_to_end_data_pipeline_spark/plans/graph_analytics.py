@@ -12,22 +12,22 @@ doubles (float addition order is partition-dependent otherwise).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.readers import read_parquet_table as t
-from ..operators import planhook
+from ..operators.fixpoint import (
+    LAST_ROUNDS,
+    emit,
+    fixpoint,
+    observe,
+    released,
+    repeat,
+)
 from ..operators.partitioning import stage_loop_edges
 from . import register
 
 _DAMP = 0.85
-
-# rounds-to-fixpoint of the last execution of each iterative entry, for
-# the scale probes (tools/scaleup_graph_probe.py): the 100 TB cost of an
-# iterative plan is rounds x per-round shuffle, so round GROWTH vs graph
-# depth is the number that must stay sub-linear (log for CC with pointer
-# doubling; peel-depth for k-core, inherent to peeling).
-LAST_ROUNDS: dict[str, int] = {}
 
 
 def _pair_edges_sql(threshold: int = 3) -> str:
@@ -171,40 +171,36 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip this entry (it is the catalog's one traversal-at-build entry
     alongside mad_per_group_approx's documented build-time action).
     """
-    # r14: src-partitioned staging -- the src-keyed per-round consumers
-    # (joins/aggregates on edges.src) reuse the preserved partitioning
-    # exchange-free.  r15: staged via stage_loop_edges (default: CACHE,
-    # which plan-preserves the hash(src) partitioning; the r14
-    # localCheckpoint did not -- its LogicalRDD reported
-    # UnknownPartitioning in the committed dumps).
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    root = (
-        deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-        .limit(1)
-        .select(F.col("src").alias("node"))
-    )
-    visited = root.select("node", F.lit(0).alias("hops")).localCheckpoint()
-    frontier = visited.select("node")
-    for h in range(1, _BFS_MAX_HOPS + 1):
-        step = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .select("node", F.lit(h).alias("hops"))
+    with released(edges):
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        root = (
+            deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
+            .limit(1)
+            .select(F.col("src").alias("node"))
         )
-        planhook.emit("graph_bfs_hops_round", step)
-        nxt = step.localCheckpoint()
-        # r14: the visited set is a LAZY union -- every child is already
-        # a checkpointed LogicalRDD, so referencing it per round costs a
-        # linear union scan, never subtree recompute; the old per-round
-        # re-checkpoint of the whole union was one extra materialization
-        # job per hop (the exponential-duplication hazard the per-round
-        # checkpoint exists for lives in nxt, which stays checkpointed)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("node")
-    edges.unpersist()
+        visited = root.select("node", F.lit(0).alias("hops")).localCheckpoint()
+
+        def step(state, rnd):
+            visited, frontier = state
+            nxt = rnd.checkpoint(
+                frontier.join(edges, frontier.node == edges.src)
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited, "node", "left_anti")
+                .select("node", F.lit(rnd.number).alias("hops"))
+            )
+            # r14: the visited set is a LAZY union -- every child is
+            # already a checkpointed LogicalRDD, so referencing it per
+            # round costs a linear union scan, never subtree recompute
+            # (the exponential-duplication hazard the per-round
+            # checkpoint exists for lives in nxt, which stays
+            # checkpointed)
+            return visited.unionByName(nxt), nxt.select("node")
+
+        visited, _ = repeat(
+            "graph_bfs_hops", (visited, visited.select("node")), step, _BFS_MAX_HOPS
+        )
     return visited.groupBy(F.col("hops").cast("bigint").alias("hops")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -598,17 +594,11 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _copurchase_edges(spark, sf_dir, threshold=2).localCheckpoint()
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    rounds = [0]
-
-    def bump() -> None:
-        rounds[0] += 1
-
     # the propagation loop itself lives in _min_label_components (ONE
-    # implementation, shared with kcore_parts' chain resolution): min-
-    # label + pointer doubling, decimal monotone-potential convergence,
-    # per-round localCheckpoint, loud cap exhaustion
-    labels = _min_label_components(nodes, edges, bump, cap=_CC_MAX_ROUNDS)
-    LAST_ROUNDS["graph_connected_components"] = rounds[0]
+    # implementation, shared with kcore_parts' chain resolution)
+    labels, _ = _min_label_components(
+        nodes, edges, cap=_CC_MAX_ROUNDS, rounds_key="graph_connected_components"
+    )
     return labels.groupBy(F.col("comp").cast("bigint").alias("component_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -636,8 +626,11 @@ def _mg_degrees(edges: DataFrame) -> DataFrame:
 
 
 def _min_label_components(
-    nodes: DataFrame, both: DataFrame, bump, cap: int = _CHAIN_CC_CAP
-) -> DataFrame:
+    nodes: DataFrame,
+    both: DataFrame,
+    cap: int = _CHAIN_CC_CAP,
+    rounds_key: str | None = None,
+) -> tuple[DataFrame, int]:
     """Min-label connected components with pointer doubling: each round
     every node takes the min of its own and its neighbors' labels, then
     chases one level of label indirection (comp'' = min(comp',
@@ -646,16 +639,11 @@ def _min_label_components(
     ``graph_connected_components`` is a thin wrapper over it, and
     ``kcore_parts`` calls it as the chain-resolution subroutine of the
     compress step.  ``nodes`` is (node); ``both`` is the directed edge
-    list (src, dst), both directions present; returns (node, comp) with
-    comp = the component's minimum node id.  Convergence is the
-    monotone-potential discipline (decimal SUM of labels strictly
-    decreases until fixpoint -- decimal(38,0) so wrapped bigint sums can
-    never fake convergence); each round is localCheckpoint-materialized
-    (iterative-loop discipline, see graph_bfs_hops).  ``bump()`` fires
-    once per round that CHANGED labels -- the LAST_ROUNDS convention
-    every iterative entry shares, so depth-probe round counts compare
-    like with like.  Cap exhaustion raises rather than returning
-    partially-propagated labels.
+    list (src, dst), both directions present; returns ((node, comp),
+    changing rounds) with comp = the component's minimum node id.
+    Convergence is the monotone-potential discipline (decimal SUM of
+    labels strictly decreases until fixpoint -- decimal(38,0) so wrapped
+    bigint sums can never fake convergence), run by ``fixpoint``.
 
     r14 round-body optimization (guide §2.4, measured cur 4.4s -> lean
     2.8s warm at sf0.1, labels bit-identical, same round count):
@@ -665,44 +653,36 @@ def _min_label_components(
       groupBy(dst).min(comp) already covers every node's own label, so
       the separate labels-side left_outer join + ``least`` disappears
       -- one equi-join per round instead of two.  The self-loop union
-      adds O(nodes) rows to the checkpointed edge list, negligible
-      against O(edges).
+      adds O(nodes) rows to the staged edge list, negligible against
+      O(edges).
     - The convergence potential rides the SAME job as the round's
-      ``localCheckpoint`` via ``observe`` (the checkpoint materializes
-      every row anyway; the old separate ``agg().collect()`` was one
-      extra job per round).
-    - The edge list is hash-repartitioned by ``src`` and CACHED (r15):
-      ``InMemoryTableScanExec`` preserves ``outputPartitioning``, so
+      ``localCheckpoint`` via ``observe`` (the old separate
+      ``agg().collect()`` was one extra job per round).
+    - The edge list is staged by ``src`` (``stage_loop_edges``), so
       each round's join shuffles only the (node, comp) labels relation,
-      never the edges (at 100 TB the edge relation dominates: this is
-      the difference between shuffling O(edges) once and once per
-      round).  r14 used repartition+localCheckpoint here, but the
-      committed plans/r14 dumps showed the checkpointed ``LogicalRDD``
-      reports ``UnknownPartitioning(0)`` -- the claimed exchange
-      elision did not exist as implemented; the cache is the pattern
-      that provably plan-preserves it (pagerank's ``ewd``; loop-body
-      dump in plans/r15/).  The cache is unpersisted before return --
-      per-call staging inside the query, never cross-run state."""
+      never the edges."""
     selfloops = nodes.select(
         F.col("node").alias("src"), F.col("node").alias("dst")
     )
     e = stage_loop_edges(both.unionByName(selfloops), "src")
-    pot_expr = F.sum(F.col("comp").cast("decimal(38,0)")).alias("pot")
-    obs0 = Observation()
-    # r14: initial labels derive from e's MATERIALIZED self-loops (one
-    # narrow scan of the cached edges) instead of re-running the nodes
-    # aggregate a second time -- requires ``both`` to be loop-free
-    # (src != dst on every row), which both callers' edge builders
-    # guarantee (strict src<dst pair enumeration, both directions)
-    labels = (
-        e.filter(F.col("src") == F.col("dst"))
-        .select(F.col("src").alias("node"), F.col("src").alias("comp"))
-        .observe(obs0, pot_expr)
-        .localCheckpoint()
-    )
-    potential = obs0.get["pot"]
-    try:
-        for _ in range(cap):
+    pot = F.sum(F.col("comp").cast("decimal(38,0)"))
+    # kcore_parts calls this per compress step: the per-call edge cache
+    # must not accumulate across calls (async: no extra job)
+    with released(e):
+        # r14: initial labels derive from e's MATERIALIZED self-loops
+        # (one narrow scan of the cached edges) instead of re-running the
+        # nodes aggregate a second time -- requires ``both`` to be
+        # loop-free (src != dst on every row), which both callers' edge
+        # lists guarantee (strict src<dst pair enumeration, both
+        # directions)
+        labels, potential = observe(
+            e.filter(F.col("src") == F.col("dst")).select(
+                F.col("src").alias("node"), F.col("src").alias("comp")
+            ),
+            pot,
+        )
+
+        def step(labels, rnd):
             stepped = (
                 e.join(labels, e.src == labels.node)
                 .groupBy(F.col("dst").alias("node"))
@@ -711,26 +691,17 @@ def _min_label_components(
             lookup = stepped.select(
                 F.col("node").alias("ptr_node"), F.col("comp").alias("ptr_comp")
             )
-            obs = Observation()
-            nxt = stepped.join(
-                lookup, stepped.comp == lookup.ptr_node, "left_outer"
-            ).select("node", F.least("comp", "ptr_comp").alias("comp"))
-            planhook.emit("min_label_components_round", nxt)
-            labels = nxt.observe(obs, pot_expr).localCheckpoint()
-            new_potential = obs.get["pot"]
-            if new_potential == potential:
-                return labels
-            bump()
-            potential = new_potential
-        raise RuntimeError(
-            "_min_label_components: potential still decreasing after "
-            f"{cap} rounds -- component diameter exceeds the cap; raise it "
-            "rather than accept unconverged labels"
+            return rnd.observe(
+                stepped.join(
+                    lookup, stepped.comp == lookup.ptr_node, "left_outer"
+                ).select("node", F.least("comp", "ptr_comp").alias("comp")),
+                pot,
+            )
+
+        return fixpoint(
+            "min_label_components", labels, potential, step,
+            cap=cap, rounds_key=rounds_key,
         )
-    finally:
-        # kcore_parts calls this per compress step: the per-call edge
-        # cache must not accumulate across calls (async: no extra job)
-        e.unpersist()
 
 
 @register(
@@ -826,11 +797,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     susp = spark.createDataFrame([], schema="node bigint, eid string")
     done = spark.createDataFrame([], schema="part_key bigint, core_degree bigint")
-    rounds = [0]
-
-    def bump() -> None:
-        rounds[0] += 1
-
+    rounds = 0
     rakes = 0
     for _ in range(_KCORE_MACRO_CAP):
         # RAKE: one peel round over multigraph degrees.  No broadcast
@@ -841,25 +808,20 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # any remaining degree-2 chains (they are core chains;
         # contraction is pure acceleration, never needed at fixpoint).
         # r14: the emptiness probes ride each checkpoint's own job via
-        # ``observe`` (the _min_label_components idiom) instead of a
-        # separate limit(1).count() job per round
-        obs_dead = Observation()
-        dead = (
-            _mg_degrees(edges)
-            .filter(F.col("d") < _KCORE_K)
-            .select("node")
-            .observe(obs_dead, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        # ``observe`` instead of a separate limit(1).count() job per round
+        dead, n_dead = observe(
+            _mg_degrees(edges).filter(F.col("d") < _KCORE_K).select("node"),
+            F.count(F.lit(1)),
         )
-        if obs_dead.get["n"] == 0:
-            LAST_ROUNDS["kcore_parts"] = rounds[0]
+        if n_dead == 0:
+            LAST_ROUNDS["kcore_parts"] = rounds
             break
-        bump()
+        rounds += 1
         rakes += 1
         rake = edges.join(
             dead.select(F.col("node").alias("u")), "u", "left_anti"
         ).join(dead.select(F.col("node").alias("v")), "v", "left_anti")
-        planhook.emit("kcore_rake_round", rake)
+        emit("kcore_rake_round", rake)
         edges = rake.localCheckpoint()
         # COMPRESS: engaged only once raking alone has gone on for a
         # few rounds (_KCORE_COMPRESS_AFTER) -- real corpora peel to
@@ -868,17 +830,13 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per round) and is collapsed here in O(log chain) rounds.
         if rakes < _KCORE_COMPRESS_AFTER:
             continue
-        obs_d2 = Observation()
-        d2 = (
-            _mg_degrees(edges)
-            .filter(F.col("d") == _KCORE_K)
-            .select("node")
-            .observe(obs_d2, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        d2, n_d2 = observe(
+            _mg_degrees(edges).filter(F.col("d") == _KCORE_K).select("node"),
+            F.count(F.lit(1)),
         )
-        if obs_d2.get["n"] == 0:
+        if n_d2 == 0:
             continue
-        bump()  # the contraction rewrite is one materialized round
+        rounds += 1  # the contraction rewrite is one materialized round
         if "eid" not in edges.columns:  # first contraction: attach ids
             edges = edges.select(
                 F.concat_ws(":", F.lit("o"), "u", "v").alias("eid"), "u", "v"
@@ -901,25 +859,23 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pointer doubling only over nodes actually ON a d2-d2 chain;
         # an isolated degree-2 node (both neighbors anchors) is its own
         # trivial chain and needs no rounds at all
-        obs_cn = Observation()
-        chain_nodes = (
+        chain_nodes, n_chain = observe(
             chain_edges.select(F.col("u").alias("node"))
             .unionByName(chain_edges.select(F.col("v").alias("node")))
-            .distinct()
-            .observe(obs_cn, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .distinct(),
+            F.count(F.lit(1)),
         )
-        if obs_cn.get["n"] > 0:
+        if n_chain > 0:
             ce = chain_edges.select(
                 F.col("u").alias("src"), F.col("v").alias("dst")
             )
-            chained = _min_label_components(
+            chained, chain_rounds = _min_label_components(
                 chain_nodes,
                 ce.unionByName(
                     ce.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 ),
-                bump,
             )
+            rounds += chain_rounds
             labels = (
                 d2.join(chain_nodes, "node", "left_anti")
                 .select("node", F.col("node").alias("comp"))
@@ -1158,75 +1114,59 @@ def coreness_hindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    # r14: the _min_label_components round-body treatment applied here
-    # (guide §2.4): (a) the edge list is hash-repartitioned by ``dst``
-    # -- the per-round join key -- and CACHED (r15: InMemoryTableScan
-    # preserves outputPartitioning; the r14 localCheckpoint reported
-    # UnknownPartitioning in the committed dumps, so rounds were still
-    # re-shuffling the edges), so rounds shuffle only the narrow
-    # (node, h) relation, never the edges;
-    # (b) the monotone convergence potential rides each round's own
-    # localCheckpoint job via ``observe`` instead of a separate
+    # r14: the _min_label_components round-body treatment applied here:
+    # (a) the edge list is staged by ``dst`` -- the per-round join key --
+    # so rounds shuffle only the narrow (node, h) relation, never the
+    # edges; (b) the monotone convergence potential rides each round's
+    # own localCheckpoint job via ``observe`` instead of a separate
     # agg().collect() action per round.  Estimates bit-identical, same
     # round count.
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "dst")
-    deg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-        .localCheckpoint()
-    )
-    wg = Window.orderBy(F.col("d").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    h0cap = (
-        deg.groupBy("d")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
-        .select(F.least(F.col("d"), F.sum("nd").over(wg)).alias("cand"))
-        .agg(F.max("cand").alias("h0"))
-        .collect()[0][0]
-    )
-    pot_expr = F.sum(F.col("h").cast("decimal(38,0)")).alias("pot")
-    obs0 = Observation()
-    h = (
-        deg.select(
-            "node", F.least(F.col("d"), F.lit(int(h0cap))).cast("bigint").alias("h")
+    with released(edges):
+        deg = (
+            edges.groupBy(F.col("src").alias("node"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+            .localCheckpoint()
         )
-        .observe(obs0, pot_expr)
-        .localCheckpoint()
-    )
-    potential = obs0.get["pot"]
-    w = Window.partitionBy("node").orderBy(F.col("nh").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    try:
-        for rnd in range(_HIX_CAP):
+        wg = Window.orderBy(F.col("d").desc()).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+        h0cap = (
+            deg.groupBy("d")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
+            .select(F.least(F.col("d"), F.sum("nd").over(wg)).alias("cand"))
+            .agg(F.max("cand").alias("h0"))
+            .collect()[0][0]
+        )
+        pot = F.sum(F.col("h").cast("decimal(38,0)"))
+        h, potential = observe(
+            deg.select(
+                "node", F.least(F.col("d"), F.lit(int(h0cap))).cast("bigint").alias("h")
+            ),
+            pot,
+        )
+        w = Window.partitionBy("node").orderBy(F.col("nh").desc()).rowsBetween(
+            Window.unboundedPreceding, Window.currentRow
+        )
+
+        def step(h, rnd):
             cnt = (
                 edges.join(h, edges.dst == h.node)
                 .select(F.col("src").alias("node"), F.col("h").alias("nh"))
                 .groupBy("node", "nh")
                 .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
             )
-            obs = Observation()
             stepped = (
                 cnt.withColumn("s", F.sum("cnt").over(w))
                 .groupBy("node")
                 .agg(F.max(F.least(F.col("nh"), F.col("s"))).alias("h"))
             )
-            planhook.emit("coreness_hindex_round", stepped)
-            h = stepped.observe(obs, pot_expr).localCheckpoint()
-            new_potential = obs.get["pot"]
-            if new_potential == potential:
-                LAST_ROUNDS["coreness_hindex"] = rnd
-                break
-            potential = new_potential
-        else:
-            raise RuntimeError(
-                f"coreness_hindex: h-iteration still decreasing after "
-                f"{_HIX_CAP} rounds -- raise _HIX_CAP rather than publish "
-                f"unconverged coreness"
-            )
-    finally:
-        edges.unpersist()
+            return rnd.observe(stepped, pot)
+
+        h, _ = fixpoint(
+            "coreness_hindex", h, potential, step,
+            cap=_HIX_CAP, rounds_key="coreness_hindex",
+        )
     return h.select(
         F.col("node").cast("bigint").alias("part_key"),
         F.col("h").cast("bigint").alias("coreness"),
@@ -1284,15 +1224,18 @@ def graph_modularity_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no graph operators in the reference (DAG1:1-322,
     linear pandas flows); see the module docstring.
     """
-    # r15: src-partitioned CACHE shared by both edge consumers (deg's
-    # groupBy(src) and intra's src-label join) -- InMemoryTableScan
-    # preserves the hash(src) partitioning, so neither re-shuffles the
-    # edges (the r14 localCheckpoint reported UnknownPartitioning and a
-    # fresh Exchange in this entry's own committed r14 dump); the lazy
-    # cache also drops the eager checkpoint-materialization job.  The
-    # returned lazy result reads the cache (the pagerank-ewd pattern),
-    # so no unpersist here; the bench clears caches between entries.
+    # src-staged edges shared by both edge consumers (deg's groupBy(src)
+    # and intra's src-label join), so neither re-shuffles the edges.  The
+    # O(brands) result is materialized before the staging is released.
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
+    with released(edges):
+        return _brand_modularity(spark, sf_dir, edges).localCheckpoint()
+
+
+def _brand_modularity(
+    spark: SparkSession, sf_dir: str, edges: DataFrame
+) -> DataFrame:
+    """``graph_modularity_brands``' per-brand rows over the staged edges."""
     lab = t(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("brand")
     )
@@ -1743,37 +1686,37 @@ def lpa_communities_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no graph operators in the reference (DAG1:1-322);
     module docstring covers the family.
     """
-    # r14: dst-partitioned edge staging (the coreness_hindex treatment)
-    # -- each round's join shuffles only the narrow labels relation,
-    # never the edges.  r15: staged via CACHE, which plan-preserves the
-    # hash(dst) partitioning (the r14 localCheckpoint did not -- its
-    # LogicalRDD reported UnknownPartitioning in the committed dumps).
+    # r14: dst-staged edges (the coreness_hindex treatment) -- each
+    # round's join shuffles only the narrow labels relation
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "dst")
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").cast("bigint").alias("label"))
-        .localCheckpoint()
-    )
     pack = F.lit(_LPA_PACK)
     packmax = F.lit(_LPA_PACK - 1)
-    for _ in range(_LPA_ROUNDS):
+
+    def step(labels, rnd):
         hist = (
             edges.join(labels, edges.dst == labels.node)
             .select(F.col("src").alias("n"), "label")
             .groupBy("n", "label")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         )
-        stepped = hist.groupBy(F.col("n").alias("node")).agg(
-            (
-                packmax
-                - F.max(F.col("cnt") * pack + (packmax - F.col("label")))
-                % pack
-            ).alias("label")
+        return rnd.checkpoint(
+            hist.groupBy(F.col("n").alias("node")).agg(
+                (
+                    packmax
+                    - F.max(F.col("cnt") * pack + (packmax - F.col("label")))
+                    % pack
+                ).alias("label")
+            )
         )
-        planhook.emit("lpa_communities_round", stepped)
-        labels = stepped.localCheckpoint()
-    edges.unpersist()
+
+    with released(edges):
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .select("node", F.col("node").cast("bigint").alias("label"))
+            .localCheckpoint()
+        )
+        labels = repeat("lpa_communities", labels, step, _LPA_ROUNDS)
     return labels.select(
         F.col("node").cast("bigint").alias("part_key"),
         F.col("label").cast("bigint").alias("community"),
@@ -1928,15 +1871,15 @@ def truss_edges_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: no graph operators in the reference (DAG1:1-322);
     module docstring covers the family.
     """
-    e = (
+    e, n_edges = observe(
         _copurchase_edges(spark, sf_dir, threshold=2)
         .filter(F.col("src") < F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .localCheckpoint()
+        .select(F.col("src").alias("a"), F.col("dst").alias("b")),
+        F.count(F.lit(1)),
     )
-    n_edges = e.count()
-    support = None
-    for rnd in range(_TRUSS_CAP):
+
+    def step(state, rnd):
+        e, _ = state
         deg = (
             e.select(F.explode(F.array("a", "b")).alias("p"))
             .groupBy("p")
@@ -1981,19 +1924,15 @@ def truss_edges_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
             .localCheckpoint()
         )
-        step = e.join(support, ["a", "b"], "leftsemi")
-        planhook.emit("truss_peel_round", step)
-        e_next = step.localCheckpoint()
-        n_next = e_next.count()
-        if n_next == n_edges:
-            LAST_ROUNDS["truss_edges_k3"] = rnd
-            break
-        e, n_edges = e_next, n_next
-    else:
-        raise RuntimeError(
-            f"truss_edges_k3: edge peel still shrinking after {_TRUSS_CAP} "
-            "rounds -- raise _TRUSS_CAP rather than publish a partial truss"
+        e_next, n_next = rnd.observe(
+            e.join(support, ["a", "b"], "leftsemi"), F.count(F.lit(1))
         )
+        return (e_next, support), n_next
+
+    (_, support), _ = fixpoint(
+        "truss_peel", (e, None), n_edges, step,
+        cap=_TRUSS_CAP, rounds_key="truss_edges_k3",
+    )
     return support.select(
         F.col("a").cast("bigint").alias("node_a"),
         F.col("b").cast("bigint").alias("node_b"),
@@ -2056,37 +1995,34 @@ def harmonic_centrality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph-curation machinery (influencer/hub scoring for sampling
     weights).
     """
-    # r14: src-partitioned staging -- the src-keyed per-round consumers
-    # (joins/aggregates on edges.src) reuse the preserved partitioning
-    # exchange-free.  r15: staged via CACHE, which plan-preserves the
-    # hash(src) partitioning (the r14 localCheckpoint did not -- its
-    # LogicalRDD reported UnknownPartitioning in the committed dumps).
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    seeds = (
-        deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
-        .limit(_HC_SEEDS)
-        .select(F.col("src").alias("seed"))
-    )
-    visited = seeds.select(
-        "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
-    ).localCheckpoint()
-    frontier = visited.select("seed", "node")
-    for h in range(1, _HC_HOPS + 1):
-        step = (
-            frontier.join(edges, frontier.node == edges.src)
-            .select("seed", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, ["seed", "node"], "left_anti")
-            .select("seed", "node", F.lit(h).alias("hop"))
+    with released(edges):
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        seeds = (
+            deg.orderBy(F.col("outdeg").desc(), F.col("src").asc())
+            .limit(_HC_SEEDS)
+            .select(F.col("src").alias("seed"))
         )
-        planhook.emit("harmonic_centrality_round", step)
-        nxt = step.localCheckpoint()
-        # r14: lazy visited union -- the graph_bfs_hops rationale (every
-        # child checkpointed; one materialization job per hop removed)
-        visited = visited.unionByName(nxt)
-        frontier = nxt.select("seed", "node")
-    edges.unpersist()
+        visited = seeds.select(
+            "seed", F.col("seed").alias("node"), F.lit(0).alias("hop")
+        ).localCheckpoint()
+
+        def step(state, rnd):
+            visited, frontier = state
+            nxt = rnd.checkpoint(
+                frontier.join(edges, frontier.node == edges.src)
+                .select("seed", F.col("dst").alias("node"))
+                .distinct()
+                .join(visited, ["seed", "node"], "left_anti")
+                .select("seed", "node", F.lit(rnd.number).alias("hop"))
+            )
+            # r14: lazy visited union -- the graph_bfs_hops rationale
+            return visited.unionByName(nxt), nxt.select("seed", "node")
+
+        visited, _ = repeat(
+            "harmonic_centrality", (visited, visited.select("seed", "node")), step,
+            _HC_HOPS,
+        )
     return (
         visited.filter(F.col("hop") > 0)
         .groupBy("node")
@@ -2177,43 +2113,31 @@ def scc_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("b").isNotNull())
     pairs = seq.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_ab"))
     totals = pairs.groupBy("a").agg(F.sum("n_ab").alias("n_a"))
-    edges = (
+    edges, n_pairs = observe(
         pairs.join(F.broadcast(totals), "a")
         .filter(F.col("n_ab").cast("double") / F.col("n_a") >= _SCC_PROB)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .localCheckpoint()
+        .select(F.col("a").alias("src"), F.col("b").alias("dst")),
+        F.count(F.lit(1)),
     )
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    r = edges
-    n_pairs = r.count()
-    for rnd in range(1, _SCC_CAP + 1):
+
+    def step(r, rnd):
         r2 = r.select(F.col("src").alias("mid"), F.col("dst").alias("dst2"))
-        # r14: the pair-count potential rides the round's own
-        # localCheckpoint job via observe (the _min_label_components
-        # idiom) instead of a separate count() job per round
-        obs = Observation()
-        step = (
+        return rnd.observe(
             r.join(r2, r.dst == r2.mid)
             .select("src", F.col("dst2").alias("dst"))
             .unionByName(r)
-            .distinct()
+            .distinct(),
+            F.count(F.lit(1)),
         )
-        planhook.emit("scc_closure_round", step)
-        grown = step.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        n_next = obs.get["n"]
-        if n_next == n_pairs:
-            LAST_ROUNDS["scc_event_types"] = rnd
-            break
-        r, n_pairs = grown, n_next
-    else:
-        raise RuntimeError(
-            f"scc_event_types: closure still growing after {_SCC_CAP} doubling "
-            "rounds -- raise _SCC_CAP rather than publish a partial closure"
-        )
+
+    r, _ = fixpoint(
+        "scc_closure", edges, n_pairs, step, cap=_SCC_CAP, rounds_key="scc_event_types"
+    )
     back = r.select(F.col("src").alias("b_src"), F.col("dst").alias("b_dst"))
     mutual = r.join(
         back, (r.src == back.b_dst) & (r.dst == back.b_src)
@@ -2335,17 +2259,11 @@ def densest_subgraph_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     RuntimeError if the cap is ever hit (impossible below ~1.5^48
     nodes, but never publish a partial peel silently).
     """
-    # r15: src-partitioned CACHE -- round 1's degree aggregate and src
-    # semi-join consume the preserved hash(src) partitioning
-    # exchange-free (the r14 localCheckpoint reported
-    # UnknownPartitioning in the committed dumps; InMemoryTableScan is
-    # the pattern that plan-preserves it).  greedy_densest_subgraph
-    # runs the peel eagerly and its result references only checkpointed
-    # survivor sets, so the cache is released right after.
+    # greedy_densest_subgraph's result reads only checkpointed survivor
+    # sets, so the staged edges are released as soon as it returns
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    out = greedy_densest_subgraph(edges, rounds_key="densest_subgraph_peel")
-    edges.unpersist()
-    return out
+    with released(edges):
+        return greedy_densest_subgraph(edges, rounds_key="densest_subgraph_peel")
 
 
 def greedy_densest_subgraph(
@@ -2363,71 +2281,47 @@ def greedy_densest_subgraph(
     #   drops anyway -- one partially-aggregated shuffle per round, no
     #   join.  (dd == 0 edge case: old removed every node via deg 0,
     #   new yields an empty aggregate -- same empty s.)
-    # - n rides each round's s-checkpoint job via ``observe`` (the
-    #   _min_label_components idiom); dd IS the cache-materializing
-    #   count of the round's surviving edges (one action either way).
-    # - e re-stages hash-partitioned by src via CACHE, so the next
-    #   round's degree aggregate and src semi-join are exchange-free
-    #   (r15: InMemoryTableScan preserves output partitioning; the r14
-    #   localCheckpoint did not -- UnknownPartitioning in the committed
-    #   dumps); only the dst semi-join re-shuffles the surviving edges.
-    #   Each round's cache is unpersisted once the next round's is
-    #   materialized (the caller owns the round-0 ``edges`` staging).
-    obs0 = Observation()
-    s = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+    # - n rides each round's s-checkpoint job via ``observe``; dd IS the
+    #   cache-materializing count of the round's surviving edges (one
+    #   action either way).
+    # - e is re-staged by src each round, so the next round's degree
+    #   aggregate and src semi-join are exchange-free; only the dst
+    #   semi-join re-shuffles the surviving edges.  Each round's staging
+    #   is carried into the next round and released when that round
+    #   ends (the caller owns the round-0 ``edges`` staging).
+    s, n = observe(
+        edges.select(F.col("src").alias("node")).distinct(), F.count(F.lit(1))
     )
-    e = edges
-    prev_e = None  # rounds' caches; round-0 edges belongs to the caller
-    n, dd = obs0.get["n"], e.count()
-    best = None  # (density, node_set, n, dd)
-    for rnd in range(_DSG_CAP):
-        if n == 0:
-            if rounds_key is not None:
-                LAST_ROUNDS[rounds_key] = rnd
-            break
+    if n == 0:
+        # density is undefined on the empty graph -- the
+        # function is exported for tests on synthetic graphs, so an
+        # empty input is reachable
+        raise ValueError("greedy_densest_subgraph: empty edge set (no nodes)")
+
+    def step(state, rnd):
+        s, e, n, dd, best = state
         dens = dd / (2 * n)
         if best is None or dens > best[0]:
             best = (dens, s, n, dd)
         deg = e.groupBy(F.col("src").alias("node")).agg(
             F.count(F.lit(1)).alias("deg")
         )
-        obs_s = Observation()
-        s = (
-            deg.filter(2 * F.lit(n) * F.col("deg") > 3 * F.lit(dd))
-            .select("node")
-            .observe(obs_s, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        s, n = observe(
+            deg.filter(2 * F.lit(n) * F.col("deg") > 3 * F.lit(dd)).select("node"),
+            F.count(F.lit(1)),
         )
         e_next = e.join(
             s.select(F.col("node").alias("src")), "src", "leftsemi"
         ).join(s.select(F.col("node").alias("dst")), "dst", "leftsemi")
-        planhook.emit("densest_subgraph_round", e_next)
-        e_next = stage_loop_edges(e_next, "src")
-        n, dd = obs_s.get["n"], e_next.count()
-        if prev_e is not None:
-            prev_e.unpersist()
-        prev_e, e = e_next, e_next
-    else:
-        raise RuntimeError(
-            f"densest_subgraph_peel: set non-empty after {_DSG_CAP} rounds -- "
-            "the 1/3-per-round removal guarantee was violated; investigate "
-            "rather than publish a partial peel"
-        )
-    if prev_e is not None:
-        # the surviving-set frames in ``best`` are checkpointed; the last
-        # round's edge cache is no longer referenced by anything returned
-        prev_e.unpersist()
-    if best is None:
-        # n == 0 at round 0: no nodes at all (empty edge DataFrame).
-        # Density is undefined on the empty graph; fail loudly instead of
-        # unpacking None (r11 advice #1) -- the function is exported for
-        # tests on synthetic graphs, so an empty input is reachable.
-        raise ValueError("greedy_densest_subgraph: empty edge set (no nodes)")
-    dens, sbest, nb, ddb = best
+        rnd.emit(e_next)
+        e_next = rnd.hold(stage_loop_edges(e_next, "src"), carried=True)
+        return (s, e_next, n, e_next.count(), best), n
+
+    state, _ = fixpoint(
+        "densest_subgraph", (s, edges, n, edges.count(), None), n, step,
+        cap=_DSG_CAP, until=lambda n: n == 0, rounds_key=rounds_key,
+    )
+    dens, sbest, nb, ddb = state[-1]
     return sbest.select(
         F.col("node").cast("bigint").alias("part_key"),
         F.lit(nb).cast("bigint").alias("n_nodes"),
@@ -2516,82 +2410,54 @@ def mis_parts_luby(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   the neighbor-min aggregate is replaced by computing md5(dst)
     #   inline on the active edge stream (one join per round gone);
     # - the active-induced edge set feeds BOTH the neighbor-min and the
-    #   kill set; it is staged src-partitioned so its two semi-joins run
-    #   once per round, not twice (r15: staged via CACHE, which
-    #   plan-preserves hash(src) for the neighbor-min groupBy and the
-    #   kill semi-join -- the r14 localCheckpoint did not -- AND is lazy,
-    #   so the separate eager eact-materialization job per round is gone:
-    #   the cache fills inside cand's own checkpoint job);
+    #   kill set; it is staged by src so its two semi-joins run once per
+    #   round, not twice, and the staging fills inside cand's own
+    #   checkpoint job (no separate eact-materialization job);
     # - the active-set emptiness probe rides each round's own
     #   localCheckpoint job via ``observe`` instead of an isEmpty() job.
-    # r15: src-partitioned CACHE for the loop-invariant edges -- the
-    # src-keyed per-round consumers reuse the preserved partitioning
-    # exchange-free (see _min_label_components on why localCheckpoint
-    # could not deliver this)
     edges = stage_loop_edges(_copurchase_edges(spark, sf_dir, threshold=2), "src")
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    obs0 = Observation()
-    pri = (
-        nodes.select("node", F.md5(F.col("node").cast("string")).alias("pri"))
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    act, n_act = pri, obs0.get["n"]
     mis_parts = []
-    try:
-        for rnd in range(_MIS_ROUNDS):
-            if n_act == 0:
-                LAST_ROUNDS["mis_parts_luby"] = rnd
-                break
-            eact = stage_loop_edges(
+
+    def step(act, rnd):
+        # both eact consumers (cand's and act's checkpoints) run in
+        # this round, which releases it
+        eact = rnd.hold(
+            stage_loop_edges(
                 edges.join(
                     act.select(F.col("node").alias("src")), "src", "leftsemi"
-                ).join(
-                    act.select(F.col("node").alias("dst")), "dst", "leftsemi"
-                ),
+                ).join(act.select(F.col("node").alias("dst")), "dst", "leftsemi"),
                 "src",
             )
-            nbmin = (
-                eact.select(
-                    "src", F.md5(F.col("dst").cast("string")).alias("npri")
-                )
-                .groupBy("src")
-                .agg(F.min("npri").alias("minp"))
-                .withColumnRenamed("src", "node")
-            )
-            step = (
-                act.join(nbmin, "node", "left_outer")
-                .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
-                .select("node")
-            )
-            planhook.emit("mis_parts_luby_round", step)
-            cand = step.localCheckpoint()
-            mis_parts.append(cand.select("node", F.lit(rnd).alias("r")))
-            killed = cand.unionByName(
-                eact.join(
-                    cand.select(F.col("node").alias("src")), "src", "leftsemi"
-                )
-                .select(F.col("dst").alias("node"))
-                .distinct()
-            )
-            obs = Observation()
-            act = (
-                act.join(killed, "node", "left_anti")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
-            )
-            n_act = obs.get["n"]
-            # both eact consumers (cand's checkpoint, act's checkpoint)
-            # have executed -- release this round's cache
-            eact.unpersist()
-        else:
-            raise RuntimeError(
-                f"mis_parts_luby: active set non-empty after {_MIS_ROUNDS} "
-                "rounds -- raise _MIS_ROUNDS (and the oracle unroll) rather "
-                "than publish a partial MIS"
-            )
-    finally:
-        edges.unpersist()
+        )
+        nbmin = (
+            eact.select("src", F.md5(F.col("dst").cast("string")).alias("npri"))
+            .groupBy("src")
+            .agg(F.min("npri").alias("minp"))
+            .withColumnRenamed("src", "node")
+        )
+        cand = rnd.checkpoint(
+            act.join(nbmin, "node", "left_outer")
+            .filter(F.col("minp").isNull() | (F.col("pri") < F.col("minp")))
+            .select("node")
+        )
+        mis_parts.append(cand.select("node", F.lit(rnd.number - 1).alias("r")))
+        killed = cand.unionByName(
+            eact.join(cand.select(F.col("node").alias("src")), "src", "leftsemi")
+            .select(F.col("dst").alias("node"))
+            .distinct()
+        )
+        return observe(act.join(killed, "node", "left_anti"), F.count(F.lit(1)))
+
+    with released(edges):
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        pri, n_act = observe(
+            nodes.select("node", F.md5(F.col("node").cast("string")).alias("pri")),
+            F.count(F.lit(1)),
+        )
+        fixpoint(
+            "mis_parts_luby", pri, n_act, step,
+            cap=_MIS_ROUNDS, until=lambda n: n == 0, rounds_key="mis_parts_luby",
+        )
     out = mis_parts[0]
     for p in mis_parts[1:]:
         out = out.unionByName(p)
